@@ -542,7 +542,7 @@ class Processing:
         strategy = (strategy or self.entity.process_strategy).lower()
         if strategy == "delta":
             strategy = "merge"
-        started = time.time()
+        started = time.perf_counter()
         if self.log_sink:
             self.log_sink.log(
                 "Processing started",
@@ -558,11 +558,11 @@ class Processing:
                 summary = self._process_historic()
             else:
                 raise DatalakeException(f"unknown strategy: {strategy}")
-            summary.duration_ms = (time.time() - started) * 1000
             self._write_watermarks()
             self._maybe_auto_optimize()
             self._gc_orphans()
             self.register_silver_in_catalog()
+            summary.duration_ms = (time.perf_counter() - started) * 1000
             if self.log_sink:
                 self.log_sink.log_summary(summary)
             return summary
@@ -988,41 +988,26 @@ class Processing:
         # records_in_slice is fully determined by the action counts —
         # no extra count() job over the source.
         if historic:
-            n = (
-                counts.get("new_version", 0)
-                + counts.get("insert", 0)
-                + counts.get("unchanged", 0)
+            new_versions = counts.get("new_version", 0)
+            unchanged = counts.get("unchanged", 0)
+            metrics = S.scd2_metrics(
+                new_versions + counts.get("insert", 0) + unchanged,
+                new_versions, unchanged, counts.get("delete_close", 0),
             )
-            return ProcessingSummary(
-                entity_id=self.entity.id,
-                destination=self.entity.destination,
-                strategy="historic",
-                records_in_slice=n,
-                updated=counts.get("new_version", 0),
-                unchanged=counts.get("unchanged", 0),
-                inserted=n - counts.get("new_version", 0) - counts.get("unchanged", 0),
-                deleted=counts.get("delete_close", 0),
-                inferred_deletes=counts.get("delete_close", 0),
-                touched=n,
+        else:
+            # deleted = matched soft-deletes + unmatched-deleted source rows;
+            # both count toward records_in_slice (Merge.scala:35,92,132)
+            soft = counts.get("soft_delete", 0) + counts.get("skip_delete", 0)
+            inserted = counts.get("insert", 0)
+            metrics = S.merge_metrics(
+                counts.get("update", 0) + counts.get("touch", 0) + soft + inserted,
+                inserted, soft, counts.get("infer_delete", 0),
             )
-        # deleted = matched soft-deletes + unmatched-deleted source rows;
-        # both count toward records_in_slice (Merge.scala:35,92,132)
-        soft = counts.get("soft_delete", 0) + counts.get("skip_delete", 0)
-        inserted = counts.get("insert", 0)
-        n = counts.get("update", 0) + counts.get("touch", 0) + soft + inserted
-        # identity: inserted + updated + deleted == records_in_slice
-        # (PROCESSING_STRATEGIES.md:124-140); inferred deletes are outside
-        # the slice so they are reported separately.
         return ProcessingSummary(
             entity_id=self.entity.id,
             destination=self.entity.destination,
-            strategy="merge",
-            records_in_slice=n,
-            inserted=inserted,
-            updated=n - inserted - soft,
-            deleted=soft,
-            inferred_deletes=counts.get("infer_delete", 0),
-            touched=n,
+            strategy=op,
+            **metrics,
         )
 
     def _process_merge(self) -> ProcessingSummary:

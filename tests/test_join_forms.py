@@ -1,8 +1,9 @@
 """The two physical merge/SCD2 join forms (single full-outer join vs the
 broadcast-capable decomposition) must be row-for-row identical on every
-clause combination — the adaptive `join_form='auto'` switch is only sound
-if the choice is unobservable in the output. Reference semantics:
-Merge.scala:96-125, Historic.scala:14-168.
+clause combination — the size-adaptive switch on ``target_rows`` is only
+sound if the choice is unobservable in the output. ``target_rows=1`` selects
+the full-outer form, ``target_rows=None`` the decomposition. Reference
+semantics: Merge.scala:96-125, Historic.scala:14-168.
 """
 
 from __future__ import annotations
@@ -18,6 +19,9 @@ from datalakefoundation_spark.strategies import (
     merge_state,
     scd2_state,
 )
+
+# system columns carrying the entity's prefix (pipeline P4/P5)
+SYSTEM_COLS = ("SourceHash", "deleted", "lastSeen", "ValidFrom", "ValidTo", "IsCurrent")
 
 SENTINEL = "2999-12-31 23:59:59"
 T0, T1 = "2024-01-01 00:00:00", "2024-02-01 00:00:00"
@@ -72,7 +76,7 @@ def _mk_rows(seed: int, historic: bool):
     return tgt, src
 
 
-def _dfs(spark, seed: int, historic: bool, evolve: bool):
+def _dfs(spark, seed: int, historic: bool, evolve: bool, prefix: str):
     tgt, src = _mk_rows(seed, historic)
     schema = (
         "PK string, payload string, SourceHash string, deleted boolean, "
@@ -82,6 +86,11 @@ def _dfs(spark, seed: int, historic: bool, evolve: bool):
         schema += ", ValidFrom string, ValidTo string, IsCurrent boolean"
     target = spark.createDataFrame(tgt, schema)
     source = spark.createDataFrame(src, schema)
+    if prefix:
+        target, source = (
+            df.withColumnsRenamed({c: prefix + c for c in SYSTEM_COLS if c in df.columns})
+            for df in (target, source)
+        )
     extra = ()
     if evolve:
         source = source.withColumn("new_col", F.concat(F.lit("n_"), F.col("PK")))
@@ -94,25 +103,38 @@ def _canon(df):
     return sorted(rows, key=repr)
 
 
+def _assert_forms_identical(spark, historic, seed, delete_missing, action, evolve, prefix):
+    target, source, extra = _dfs(spark, seed, historic, evolve, prefix)
+    kw = dict(
+        pk="PK",
+        prefix=prefix,
+        processing_time=T1,
+        delete_window=F.col("t.win") if delete_missing else None,
+        delete_missing=delete_missing,
+        with_action_column=action,
+        extra_columns=extra,
+    )
+    state = scd2_state if historic else merge_state
+    a = state(target, source, target_rows=1, **kw)
+    b = state(target, source, target_rows=None, **kw)
+    assert a.columns == b.columns
+    assert _canon(a) == _canon(b)
+
+
 @pytest.mark.parametrize("seed", [3, 17])
 @pytest.mark.parametrize("delete_missing", [False, True])
 @pytest.mark.parametrize("action", [False, True])
 @pytest.mark.parametrize("evolve", [False, True])
 def test_merge_forms_identical(spark, seed, delete_missing, action, evolve):
-    target, source, extra = _dfs(spark, seed, historic=False, evolve=evolve)
-    window = F.col("t.win") if delete_missing else None
-    kw = dict(
-        pk="PK",
-        processing_time=T1,
-        delete_window=window,
-        delete_missing=delete_missing,
-        with_action_column=action,
-        extra_columns=extra,
-    )
-    a = merge_state(target, source, join_form="full_outer", **kw)
-    b = merge_state(target, source, join_form="decomposed", **kw)
-    assert a.columns == b.columns
-    assert _canon(a) == _canon(b)
+    _assert_forms_identical(spark, False, seed, delete_missing, action, evolve, "")
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+@pytest.mark.parametrize("delete_missing", [False, True])
+@pytest.mark.parametrize("action", [False, True])
+@pytest.mark.parametrize("evolve", [False, True])
+def test_merge_forms_identical_prefixed(spark, seed, delete_missing, action, evolve):
+    _assert_forms_identical(spark, False, seed, delete_missing, action, evolve, "dlf_")
 
 
 @pytest.mark.parametrize("seed", [7, 29])
@@ -120,28 +142,19 @@ def test_merge_forms_identical(spark, seed, delete_missing, action, evolve):
 @pytest.mark.parametrize("action", [False, True])
 @pytest.mark.parametrize("evolve", [False, True])
 def test_scd2_forms_identical(spark, seed, delete_missing, action, evolve):
-    target, source, extra = _dfs(spark, seed, historic=True, evolve=evolve)
-    window = F.col("t.win") if delete_missing else None
-    kw = dict(
-        pk="PK",
-        processing_time=T1,
-        delete_window=window,
-        delete_missing=delete_missing,
-        with_action_column=action,
-        extra_columns=extra,
-    )
-    a = scd2_state(target, source, join_form="full_outer", **kw)
-    b = scd2_state(target, source, join_form="decomposed", **kw)
-    assert a.columns == b.columns
-    assert _canon(a) == _canon(b)
+    _assert_forms_identical(spark, True, seed, delete_missing, action, evolve, "")
+
+
+@pytest.mark.parametrize("seed", [7, 29])
+@pytest.mark.parametrize("delete_missing", [False, True])
+@pytest.mark.parametrize("action", [False, True])
+@pytest.mark.parametrize("evolve", [False, True])
+def test_scd2_forms_identical_prefixed(spark, seed, delete_missing, action, evolve):
+    _assert_forms_identical(spark, True, seed, delete_missing, action, evolve, "dlf_")
 
 
 def test_auto_picks_by_target_rows():
-    assert _pick_full_outer("auto", SMALL_TARGET_ROWS)
-    assert _pick_full_outer("auto", 1)
-    assert not _pick_full_outer("auto", SMALL_TARGET_ROWS + 1)
-    assert not _pick_full_outer("auto", None)  # unknown -> scale-safe form
-    assert _pick_full_outer("full_outer", None)
-    assert not _pick_full_outer("decomposed", 1)
-    with pytest.raises(ValueError):
-        _pick_full_outer("bogus", None)
+    assert _pick_full_outer(SMALL_TARGET_ROWS)
+    assert _pick_full_outer(1)
+    assert not _pick_full_outer(SMALL_TARGET_ROWS + 1)
+    assert not _pick_full_outer(None)  # unknown -> scale-safe form

@@ -16,6 +16,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from datalakefoundation_spark import strategies as S
 from datalakefoundation_spark.processing import Processing
 from tests.helpers import make_metadata, write_slice
 
@@ -260,9 +261,32 @@ def _scd2_model(slices: list[list[dict]], sentinel: str) -> dict[tuple, dict]:
     }
 
 
+def _force_decomposed(monkeypatch):
+    """Route every Processing merge through the decomposed join form: no
+    target counts as small, and building the full-outer join fails."""
+
+    def no_full_outer(*args, **kwargs):
+        raise AssertionError("full-outer join form used")
+
+    monkeypatch.setattr(S, "SMALL_TARGET_ROWS", 0)
+    monkeypatch.setattr(S, "_full_outer", no_full_outer)
+
+
 @pytest.mark.parametrize("mode", ["cow", "mor"])
 @pytest.mark.parametrize("seed", [5, 31])
 def test_scd2_history_matches_reference_model(spark, lake_root, prefix, seed, mode):
+    _check_scd2_history(spark, lake_root, prefix, seed, mode)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_scd2_history_decomposed_matches_reference_model(
+    spark, lake_root, prefix, mode, monkeypatch
+):
+    _force_decomposed(monkeypatch)
+    _check_scd2_history(spark, lake_root, prefix, 5, mode)
+
+
+def _check_scd2_history(spark, lake_root, prefix, seed, mode):
     from datalakefoundation_spark import pipeline as P
 
     md = make_metadata(lake_root, prefix, processtype="historic")
@@ -314,6 +338,18 @@ def test_scd2_history_matches_reference_model(spark, lake_root, prefix, seed, mo
 @pytest.mark.parametrize("mode", ["cow", "mor"])
 @pytest.mark.parametrize("seed", [11, 23, 47])
 def test_merge_history_matches_reference_model(spark, lake_root, prefix, seed, mode):
+    _check_merge_history(spark, lake_root, prefix, seed, mode)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_history_decomposed_matches_reference_model(
+    spark, lake_root, prefix, mode, monkeypatch
+):
+    _force_decomposed(monkeypatch)
+    _check_merge_history(spark, lake_root, prefix, 11, mode)
+
+
+def _check_merge_history(spark, lake_root, prefix, seed, mode):
     md = make_metadata(lake_root, prefix)
     slices = _gen_history(seed)
     p = None

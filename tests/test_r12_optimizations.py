@@ -169,7 +169,7 @@ def _plan(df):
 def test_shj_hint_builds_known_small_source(spark):
     target, source = _merge_inputs(spark)
     st = S.merge_state(
-        target, source, "PK_k", join_form="full_outer", source_rows=50
+        target, source, "PK_k", target_rows=50, source_rows=50
     )
     plan = _plan(st)
     assert "ShuffledHashJoin" in plan and "BuildRight" in plan, plan
@@ -180,39 +180,26 @@ def test_shj_hint_builds_small_target_when_source_unknown(spark):
     table — the build side must be the TARGET (bounded by the
     SMALL_TARGET_ROWS gate), never the unchecked source."""
     target, source = _merge_inputs(spark)
-    st = S.merge_state(
-        target, source, "PK_k", join_form="auto", target_rows=50
-    )
+    st = S.merge_state(target, source, "PK_k", target_rows=50)
     plan = _plan(st)
     assert "ShuffledHashJoin" in plan and "BuildLeft" in plan, plan
     # oversized source_rows must behave like unknown
     st2 = S.merge_state(
-        target, source, "PK_k", join_form="auto", target_rows=50,
+        target, source, "PK_k", target_rows=50,
         source_rows=S.SMALL_TARGET_ROWS + 1,
     )
     assert "BuildLeft" in _plan(st2)
 
 
-def test_shj_no_hint_when_both_sides_unknown(spark):
-    """Forced full_outer with no size signal: no unspillable build — the
-    planner keeps its own choice (sort-merge under the default session)."""
-    target, source = _merge_inputs(spark)
-    st = S.merge_state(target, source, "PK_k", join_form="full_outer")
-    assert "ShuffledHashJoin" not in _plan(st)
-
-
 def test_shj_build_side_rows_identical(spark):
-    """The hint placement is physical only: all three hint outcomes return
+    """The hint placement is physical only: both hint outcomes return
     row-identical merge states."""
     target, source = _merge_inputs(spark)
     a = S.merge_state(
-        target, source, "PK_k", join_form="full_outer", source_rows=50
+        target, source, "PK_k", target_rows=50, source_rows=50
     )
-    b = S.merge_state(
-        target, source, "PK_k", join_form="full_outer", target_rows=50
-    )
-    c = S.merge_state(target, source, "PK_k", join_form="full_outer")
-    assert _rows(a) == _rows(b) == _rows(c)
+    b = S.merge_state(target, source, "PK_k", target_rows=50)
+    assert _rows(a) == _rows(b)
 
 
 def test_scd2_shj_build_side(spark):
@@ -229,12 +216,10 @@ def test_scd2_shj_build_side(spark):
         f"{prefix}ValidTo", F.lit(S.VALID_TO_SENTINEL).cast("timestamp")
     ).withColumn(f"{prefix}IsCurrent", F.lit(True))
     small_src = S.scd2_state(
-        t2, s2, "PK_k", join_form="full_outer", source_rows=50
+        t2, s2, "PK_k", target_rows=50, source_rows=50
     )
     assert "BuildRight" in _plan(small_src)
-    unknown_src = S.scd2_state(
-        t2, s2, "PK_k", join_form="auto", target_rows=50
-    )
+    unknown_src = S.scd2_state(t2, s2, "PK_k", target_rows=50)
     assert "BuildLeft" in _plan(unknown_src)
     assert _rows(small_src) == _rows(unknown_src)
 

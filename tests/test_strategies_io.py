@@ -3,6 +3,8 @@ read silver LakeTable -> assert rows/columns/metrics (reference style:
 FullProcessingSpec / MergeProcessingSpec / HistoricProcessingSpec /
 InferDeletesSpec)."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,6 +55,28 @@ def test_merge_first_run_diverts_to_full(spark, lake_root, prefix):
     summary = p.process()  # entity processtype=merge
     assert summary.strategy == "full"
     assert silver(p).count() == 10
+
+
+def test_summary_duration_covers_post_write_phases(spark, lake_root, prefix, monkeypatch):
+    """duration_ms runs on a monotonic clock until just before the summary
+    is logged, so it covers the post-write phases (watermarks,
+    auto-optimize, orphan GC, catalog view), not only the write."""
+    gc_done = []
+
+    def slow_gc(self):
+        time.sleep(0.2)
+        gc_done.append(time.perf_counter())
+
+    monkeypatch.setattr(Processing, "_gc_orphans", slow_gc)
+    md = make_metadata(lake_root, prefix)
+    write_slice(spark, md, "s1.parquet", rows_v1(10))
+    p = Processing(spark, md, 1, "s1.parquet", {"processing.time": T0})
+    t0 = time.perf_counter()
+    summary = p.process("full")
+    assert summary.duration_ms >= 200
+    # the run started after t0 and ended after the sweep (50 ms slack for
+    # the calls before the clock starts)
+    assert summary.duration_ms >= (gc_done[0] - t0) * 1000 - 50
 
 
 def test_merge_upsert_and_touch(spark, lake_root, prefix):

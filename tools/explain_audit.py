@@ -51,9 +51,10 @@ ALLOWED_CARTESIAN = {
 # Queries allowed to contain a ShuffledHashJoin (r12, VERDICT r11 #6): a
 # shuffled-hash build map cannot spill, so every SHJ in an audited plan must
 # have a PROVABLY bounded build side. The only sanctioned source is the
-# merge/SCD2 small-target full-outer hint (strategies._shj_build_side),
-# whose build side is gated on source_rows/target_rows <= SMALL_TARGET_ROWS
-# (2M). Any other query planning an SHJ — e.g. via a session-level
+# merge/SCD2 small-target full-outer hint (strategies._shj_build_side):
+# it builds the source when source_rows <= SMALL_TARGET_ROWS (2M), else the
+# target, which the full-outer form only joins when target_rows <= 2M. Any
+# other query planning an SHJ — e.g. via a session-level
 # preferSortMergeJoin=false — is flagged as a problem.
 ALLOWED_SHJ_PREFIXES = ("q_merge", "q_scd2", "q_delete_inference", "q_change_feed")
 
